@@ -826,9 +826,12 @@ def partition_summary(
 ) -> DataFrame:
     """One row per partition: docs, failed docs, violation count, pass rate.
 
-    Computed in the SAME pass as the rule battery (the violations array is a
-    projection; the only shuffle is the final tiny groupBy on the partition
-    key) — no second scan of the table."""
+    A scan of its own: it evaluates the battery again in its per-row array
+    form (``violations_array``, a projection; the only shuffle is the final
+    tiny groupBy on the partition key). A caller that also writes the
+    violations should aggregate its battery frame instead, as
+    ``state.run_resumable_validation(summary_targets=...)`` does for the
+    job."""
     parts = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     n_viol = F.size(violations_array(df.schema, compiled))
@@ -851,7 +854,8 @@ def partition_summary(
 
 
 def rule_summary(df: DataFrame, schema, partition_cols: list[str] | str = "part") -> DataFrame:
-    """Violation counts per (partition, rule, path) — rollup-ready."""
+    """Violation counts per (partition, rule, path) — rollup-ready. Like
+    :func:`partition_summary`, its own scan and battery evaluation."""
     parts = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     return (

@@ -366,7 +366,10 @@ def validate_dataframe(
     ``posexplode_outer`` so the whole battery stays inside whole-stage
     codegen (~5x faster than HOF evaluation); ``strategy='array'`` keeps the
     single-expression higher-order-function plan (one array per row — the
-    form summaries and streaming reuse). Identical violation semantics.
+    form streaming, ``quarantine`` and the standalone
+    ``checks.partition_summary`` / ``rule_summary`` operators reuse; the job's
+    summaries aggregate its exploded battery frame). Identical violation
+    semantics.
     """
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     if id_cols is None:
@@ -377,8 +380,9 @@ def validate_dataframe(
         # Measured across schema shapes (array-heavy, root-heavy, flat): the
         # posexplode whole-stage-codegen plan beats the HOF plan everywhere
         # (2-3x on array-heavy, ~1.4x even with no array rules at all), so
-        # 'auto' is simply 'explode'. 'array' remains selectable — summaries
-        # and streaming reuse its per-row violations_array form.
+        # 'auto' is simply 'explode'. 'array' remains selectable — streaming
+        # and the standalone summary operators reuse its per-row
+        # violations_array form.
         strategy = "explode"
     if strategy == "explode":
         from .plan_exploded import exploded_violations

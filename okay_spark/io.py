@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _is_table_ident(target: str) -> bool:
@@ -119,6 +120,51 @@ def write_table(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(target)
+
+
+def _sql_literal(v) -> str:
+    """A Python scalar as a Spark SQL literal. Strings travel as UTF-8 hex
+    (immune to quoting and escape settings), floats as their shortest
+    round-trip text."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, int):
+        return f"{v}L"
+    if isinstance(v, float):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode().hex()}' AS STRING)"
+    raise TypeError(f"no SQL literal for {type(v).__name__}")
+
+
+def literal_frame(
+    spark: SparkSession,
+    rows: list[tuple],
+    schema: str | StructType,
+) -> DataFrame:
+    """A small frame of driver-side rows built from plan literals.
+
+    ``spark.createDataFrame(list)`` ships pickled rows through Python
+    workers; here the rows are one literal array in the plan (built from a
+    single SQL expression, not one py4j call per value), so the frame runs
+    in the JVM alone. The array is cast to ``schema``: values take its field
+    types and the fields keep its nullability. Row ``i`` is element ``i``,
+    indexed by ``spark.range`` over the default parallelism — the partitions
+    ``createDataFrame(list)`` spreads rows over — so a written sink keeps
+    the same file layout."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import ArrayType, DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    array = "array(" + ", ".join(
+        "struct(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
+    ) + ")"
+    return (
+        spark.range(len(rows), numPartitions=spark.sparkContext.defaultParallelism)
+        .select(F.expr(array).cast(ArrayType(schema, False))[F.col("id")].alias("_r"))
+        .select("_r.*")
+    )
 
 
 def write_bucketed(

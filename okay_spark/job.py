@@ -4,11 +4,16 @@ runs on the cluster (north rule).
 One invocation = one resumable run over an input table of interleaved
 documents:
 
-1. rule battery  -> violations sink            (shuffle-free)
+1. rule battery, evaluated ONCE and persisted for the step
+   -> violations sink (pending partitions; shuffle-free), lineage read back
+   from that sink (resume skips done parts), per-partition and per-rule
+   summaries of every partition (tiny aggregates of the battery frame)
 2. doc_id uniqueness (salted)                  (hash-aggregate shuffle)
 3. media_ref referential vs the media catalog  (broadcast | salted SMJ)
 4. per-column stats + drift vs a reference snapshot -> metrics sink
-5. per-partition pass/fail summaries + lineage -> resume skips done parts
+
+The uniqueness and referential row counts in ``run_metrics`` are observed
+on their sink writes (``pyspark.sql.Observation``), not re-counted.
 
 Usage (cluster) — spark-submit's primary file must be a top-level script
 (relative imports have no parent package there), so the repo-root launcher
@@ -32,18 +37,15 @@ import argparse
 import json
 import time
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .checks import (
     column_stats,
     drift_metrics,
     media_ref_violations,
-    partition_summary,
-    rule_summary,
     uniqueness_violations,
 )
-from .engine import validate_dataframe
-from .io import read_table, write_table
+from .io import literal_frame, read_table, write_table
 from .schema import compile_cached
 from .state import run_resumable_validation
 
@@ -81,13 +83,13 @@ def run_full_validation(
         lineage_target=f"{output}/lineage",
         run_id=run_id,
         snapshot=input_snapshot,
+        summary_targets=(f"{output}/summaries", f"{output}/summaries_by_rule"),
     )
 
     dup = uniqueness_violations(docs, "doc_id", salt_buckets=salt_buckets).withColumn(
         "run_id", F.lit(run_id)
     )
-    write_table(dup, f"{output}/violations_uniqueness", mode="append")
-    n_dup = dup.count()
+    n_dup = _append_counted(dup, f"{output}/violations_uniqueness")
 
     refv = media_ref_violations(
         docs,
@@ -95,8 +97,7 @@ def run_full_validation(
         broadcast=broadcast_catalog,
         salt_buckets=None if broadcast_catalog else salt_buckets,
     ).withColumn("run_id", F.lit(run_id))
-    write_table(refv, f"{output}/violations_referential", mode="append")
-    n_ref = refv.count()
+    n_ref = _append_counted(refv, f"{output}/violations_referential")
 
     stats = column_stats(docs.select("doc_id", partition_col)).withColumn("run_id", F.lit(run_id))
     write_table(stats, f"{output}/metrics_stats", mode="append")
@@ -107,18 +108,14 @@ def run_full_validation(
         sizes_ref = reference_snapshot.select(F.size("spans").cast("double").alias("n_spans"))
         drift = drift_metrics(sizes_cur, sizes_ref, "n_spans", bins=16)
         write_table(
-            spark.createDataFrame(
+            literal_frame(
+                spark,
                 [(run_id, drift["column"], float(drift["psi"]), float(drift["ks"]))],
                 "run_id string, column string, psi double, ks double",
             ),
             f"{output}/metrics_drift",
             mode="append",
         )
-
-    summary = partition_summary(docs, compiled, partition_col).withColumn("run_id", F.lit(run_id))
-    write_table(summary, f"{output}/summaries", mode="append")
-    rules = rule_summary(docs, compiled, partition_col).withColumn("run_id", F.lit(run_id))
-    write_table(rules, f"{output}/summaries_by_rule", mode="append")
 
     metrics = {
         "run_id": run_id,
@@ -129,11 +126,19 @@ def run_full_validation(
         "drift": drift,
     }
     write_table(
-        spark.createDataFrame([(run_id, json.dumps(metrics, default=str))], "run_id string, metrics string"),
+        literal_frame(spark, [(run_id, json.dumps(metrics, default=str))], "run_id string, metrics string"),
         f"{output}/run_metrics",
         mode="append",
     )
     return metrics
+
+
+def _append_counted(df: DataFrame, target: str) -> int:
+    """Append ``df`` to ``target``; its row count is observed on the write
+    itself, so counting does not recompute the check."""
+    obs = Observation()
+    write_table(df.observe(obs, F.count(F.lit(1)).alias("rows")), target, mode="append")
+    return obs.get["rows"]
 
 
 def main() -> None:

@@ -21,14 +21,16 @@ Lineage table schema:
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .engine import validate_dataframe
-from .io import read_table, table_exists, write_table
-from .schema import CompiledSchema, compile_cached
+from .io import literal_frame, read_table, table_exists, write_table
+from .schema import CompiledSchema, FieldSpec, compile_cached
 
 LINEAGE_DDL = (
     "part string, run_id string, run_seq bigint, snapshot string, "
@@ -36,6 +38,10 @@ LINEAGE_DDL = (
     "status string, n_docs bigint, n_violations bigint, n_failed_docs bigint, "
     "fp bigint"
 )
+
+# per-row tag of the job's battery frame, so the summaries count failing
+# ROWS (a doc id duplicated in the input counts once per row); never written
+_ROW_TAG = "_okay_row"
 
 # order-independent content digests sum per-row 60-bit md5 values modulo
 # this Mersenne prime (2^61-1): commutative, overflow-free in decimal(38,0)
@@ -198,6 +204,7 @@ def run_resumable_validation(
     run_id: str,
     snapshot: str = "",
     fingerprint_content=None,
+    summary_targets: tuple[str, str] | None = None,
 ) -> dict:
     """Validate only partitions not yet marked done; append violations and
     lineage. Returns run metrics.
@@ -217,6 +224,16 @@ def run_resumable_validation(
     for plain-parquet lakes; Iceberg sources get the same effect cheaper by
     passing the snapshot id.
 
+    ``summary_targets = (summaries, summaries_by_rule)`` also appends, for
+    EVERY partition (skipped ones included), ``(part, n_docs, n_violations,
+    n_failed_docs, pass_rate, run_id)`` and ``(part, rule, path, cnt,
+    run_id)`` — the schemas of :func:`okay_spark.checks.partition_summary`
+    and :func:`~okay_spark.checks.rule_summary`. They come from the same
+    battery evaluation as the violations write: the battery then runs once
+    over the whole input (no resume pruning), is persisted for the call, and
+    the violations write keeps only the pending partitions. ``n_failed_docs``
+    counts failing rows, via a per-row tag that no sink receives.
+
     Scan budget (tests/test_pipeline_ops.py asserts it): ONE full-data scan
     per run — the violations write. The per-partition doc counts read only
     the partition column (or ride the fingerprint aggregate when
@@ -227,6 +244,7 @@ def run_resumable_validation(
     spark = df.sparkSession
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     fp = schema_fingerprint(compiled)
+    part_str = F.col(partition_col).cast("string")
 
     done = completed_partitions(spark, lineage_target, snapshot, fp)
     current_fps: dict[str, tuple[int, int]] = {}
@@ -242,8 +260,8 @@ def run_resumable_validation(
         done = unchanged_partitions(
             spark, lineage_target, fp, {p: v[1] for p, v in current_fps.items()}
         )
-    if done:
-        df = df.filter(~F.col(partition_col).cast("string").isin(*done))
+    if done and summary_targets is None:
+        df = df.filter(~part_str.isin(*done))
 
     # ONE full-data scan per run (round 1 scanned twice: once for the
     # partition summary, once for the violations write). Order of work:
@@ -256,25 +274,47 @@ def run_resumable_validation(
     #    violation rows are themselves a north-rule deliverable);
     # 3. the lineage metrics derive from the WRITTEN violations (sparse,
     #    already durable) joined driver-side with the doc counts — the source
-    #    table is not scanned again.
+    #    table is not scanned again;
+    # 4. with summary_targets, the summaries aggregate the persisted battery
+    #    frame and the doc counts — no scan either.
     if current_fps:
         # the fingerprint aggregate already counted every partition — no
         # second scan
-        doc_counts = {
-            p: n for p, (n, _) in current_fps.items() if p not in done
-        }
+        doc_counts = {p: n for p, (n, _) in current_fps.items()}
     else:
         doc_counts = {
             r["part"]: r["n"] for r in partition_doc_counts(df, partition_col).collect()
         }
-    if not doc_counts:
-        return {"run_id": run_id, "partitions": 0, "skipped": len(done), "n_docs": 0}
+    pending = {p: n for p, n in doc_counts.items() if p not in done}
+    idle = {"run_id": run_id, "partitions": 0, "skipped": len(done), "n_docs": 0}
+    if not pending and not (summary_targets and doc_counts):
+        return idle
 
     id_cols = [c for c in df.columns if c == "doc_id"]
-    violations = validate_dataframe(
-        df, compiled, id_cols=[partition_col, *id_cols]
-    ).withColumn("run_id", F.lit(run_id))
-    write_table(violations, violations_target, mode="append")
+    keys = [partition_col, *id_cols]
+    if summary_targets is not None:
+        df = df.withColumn(_ROW_TAG, F.monotonically_increasing_id())
+        keys.append(_ROW_TAG)
+        # declared optional without rules: never checked, never an extra field
+        compiled = dataclasses.replace(
+            compiled, fields={**compiled.fields, _ROW_TAG: FieldSpec("optional", True)}
+        )
+    battery = validate_dataframe(df, compiled, id_cols=keys)
+    if summary_targets is not None:
+        battery = battery.persist()
+    try:
+        if pending:
+            violations = battery.drop(_ROW_TAG)
+            if len(pending) < len(doc_counts):
+                # skipped partitions feed only the summaries
+                violations = violations.filter(~part_str.isin(*done))
+            write_table(violations.withColumn("run_id", F.lit(run_id)), violations_target, mode="append")
+        if summary_targets is not None:
+            _write_summaries(battery, doc_counts, df.schema[partition_col], run_id, summary_targets)
+    finally:
+        battery.unpersist()
+    if not pending:
+        return idle
 
     written = read_table(spark, violations_target).filter(F.col("run_id") == run_id)
     vaggs = [F.count(F.lit(1)).alias("n_violations")]
@@ -304,16 +344,54 @@ def run_resumable_validation(
             viol_counts.get(part, (0, 0))[1],
             current_fps[part][1] if part in current_fps else None,
         )
-        for part, n_docs in sorted(doc_counts.items())
+        for part, n_docs in sorted(pending.items())
     ]
-    write_table(spark.createDataFrame(lineage_rows, LINEAGE_DDL), lineage_target, mode="append")
+    write_table(literal_frame(spark, lineage_rows, LINEAGE_DDL), lineage_target, mode="append")
     return {
         "run_id": run_id,
         "partitions": len(lineage_rows),
         "skipped": len(done),
-        "n_docs": sum(doc_counts.values()),
+        "n_docs": sum(pending.values()),
         "n_violations": sum(v[0] for v in viol_counts.values()),
     }
+
+
+def _write_summaries(
+    battery: DataFrame,
+    doc_counts: dict,
+    part_field: StructField,
+    run_id: str,
+    targets: tuple[str, str],
+) -> None:
+    """Append the per-partition and per-rule summaries of a row-tagged
+    battery frame, in the schemas of ``checks.partition_summary`` /
+    ``checks.rule_summary``: ``part`` keeps the input column's type, and
+    every partition in ``doc_counts`` gets a row, failing or not."""
+    pc = part_field.name
+    counts = literal_frame(
+        battery.sparkSession,
+        list(doc_counts.items()),
+        StructType([part_field, StructField("n_docs", LongType(), False)]),
+    )
+    per_part = battery.groupBy(F.col(pc).alias("_p")).agg(
+        F.count(F.lit(1)).alias("_nv"), F.count_distinct(_ROW_TAG).alias("_nf")
+    )
+    n_failed = F.coalesce(F.col("_nf"), F.lit(0))
+    joined = counts.join(per_part, counts[pc].eqNullSafe(per_part["_p"]), "left")
+    # one file, as the aggregate it replaces wrote
+    summary = joined.coalesce(1).select(
+        pc,
+        "n_docs",
+        # nullable, like the SUM it replaces in partition_summary
+        F.when(F.col("_nv").isNull(), F.lit(0)).otherwise(F.col("_nv")).alias("n_violations"),
+        n_failed.alias("n_failed_docs"),
+        F.when(
+            F.col("n_docs") > 0, (F.col("n_docs") - n_failed) / F.col("n_docs")
+        ).alias("pass_rate"),
+    )
+    rules = battery.groupBy(pc, "rule", "path").agg(F.count(F.lit(1)).alias("cnt"))
+    for frame, target in zip((summary, rules), targets):
+        write_table(frame.withColumn("run_id", F.lit(run_id)), target, mode="append")
 
 
 def violation_trend(

@@ -340,6 +340,156 @@ def test_resumable_run_scans_source_once(spark, tmp_path, monkeypatch):
     assert "part" in written.columns  # per-partition violation rows
 
 
+def _run_job(spark, docs, out, run_id, **kwargs):
+    from okay_spark.fixtures import document_schema, media_catalog
+    from okay_spark.job import run_full_validation
+
+    return run_full_validation(
+        spark, docs, media_catalog(spark, 1_000), document_schema,
+        output=out, run_id=run_id, input_snapshot="s1", **kwargs,
+    )
+
+
+def _spy_battery(monkeypatch):
+    """Count battery lowerings through the state layer, calls to the HOF
+    lowering and ``DataFrame.count`` calls made from ``okay_spark.job``;
+    record the row count of every frame the battery is lowered over."""
+    import sys
+
+    import okay_spark.checks as checks
+    import okay_spark.engine as engine
+    import okay_spark.state as state
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = {"validate": [], "array": 0, "job_counts": 0}
+    real_vd, real_count = state.validate_dataframe, DataFrame.count
+
+    def spy_vd(df, *a, **k):
+        calls["validate"].append(real_count(df))
+        return real_vd(df, *a, **k)
+
+    def spy_count(self):
+        if sys._getframe(1).f_globals.get("__name__") == "okay_spark.job":
+            calls["job_counts"] += 1
+        return real_count(self)
+
+    monkeypatch.setattr(state, "validate_dataframe", spy_vd)
+    monkeypatch.setattr(DataFrame, "count", spy_count)
+    for mod in (checks, engine):
+        def spy_va(*a, _real=mod.violations_array, **k):
+            calls["array"] += 1
+            return _real(*a, **k)
+
+        monkeypatch.setattr(mod, "violations_array", spy_va)
+    return calls
+
+
+def test_job_lowers_battery_once(spark, tmp_path, monkeypatch):
+    """Lowering budget of a fresh job run: ONE battery lowering (through
+    ``state.validate_dataframe``) feeds the violations write, the lineage and
+    both summaries; the HOF ``violations_array`` form is never built, and no
+    sink is re-counted with ``.count()`` (counts come from the writes)."""
+    from okay_spark.fixtures import interleaved_documents
+
+    docs = interleaved_documents(spark, 300, parts=4).cache()
+    calls = _spy_battery(monkeypatch)
+    metrics = _run_job(spark, docs, str(tmp_path / "run"), "t1")
+    assert calls == {"validate": [300], "array": 0, "job_counts": 0}
+    assert metrics["battery"]["partitions"] == 4
+    assert metrics["duplicate_keys"] == spark.read.parquet(str(tmp_path / "run" / "violations_uniqueness")).count()
+    assert metrics["unknown_media_refs"] == spark.read.parquet(str(tmp_path / "run" / "violations_referential")).count()
+
+
+def test_job_summaries_match_operators(spark, tmp_path):
+    """The job's summaries come from its battery frame, not from the
+    ``partition_summary`` / ``rule_summary`` operators — yet equal them value
+    for value, with the same parquet schema (types, nullability, order)."""
+    import pyarrow.parquet as pq
+
+    from okay_spark.checks import partition_summary, rule_summary
+    from okay_spark.fixtures import document_schema, interleaved_documents
+
+    docs = interleaved_documents(spark, 400, parts=4).cache()
+    out = tmp_path / "run"
+    _run_job(spark, docs, str(out), "t1")
+    for sink, op in (("summaries", partition_summary), ("summaries_by_rule", rule_summary)):
+        want = op(docs, document_schema, "part").withColumn("run_id", F.lit("t1"))
+        want.write.parquet(str(tmp_path / f"want_{sink}"))
+        got = spark.read.parquet(str(out / sink))
+        assert sorted(got.collect()) == sorted(want.collect()), sink
+
+        def schema(path):
+            return pq.read_schema(next(path.glob("*.parquet"))).remove_metadata()
+
+        assert schema(out / sink) == schema(tmp_path / f"want_{sink}"), sink
+
+
+def test_job_summaries_count_failing_rows(spark, tmp_path):
+    """Two input rows sharing a doc_id that both fail: the summaries count
+    failing ROWS (2), the lineage distinct failing doc ids (1)."""
+    ddl = (
+        "doc_id string, "
+        "spans array<struct<kind:string, text:string, media_ref:string, offset:int>>, "
+        "part int"
+    )
+    ok = [("text", "hello", None, 0)]
+    docs = spark.createDataFrame(
+        [
+            ("doc-000000000001", [], 0),  # too_few_elements
+            ("doc-000000000001", [], 0),
+            ("doc-000000000002", ok, 0),
+            ("doc-000000000003", ok, 1),
+        ],
+        ddl,
+    ).cache()
+    out = tmp_path / "run"
+    _run_job(spark, docs, str(out), "t1")
+    summary = {r["part"]: r for r in spark.read.parquet(str(out / "summaries")).collect()}
+    lineage = {r["part"]: r for r in spark.read.parquet(str(out / "lineage")).collect()}
+    assert (summary[0]["n_docs"], summary[0]["n_violations"], summary[0]["n_failed_docs"]) == (3, 2, 2)
+    assert summary[0]["pass_rate"] == pytest.approx(1 / 3)
+    assert (summary[1]["n_violations"], summary[1]["n_failed_docs"], summary[1]["pass_rate"]) == (0, 0, 1.0)
+    assert (lineage["0"]["n_violations"], lineage["0"]["n_failed_docs"]) == (2, 1)
+
+
+def test_resumed_job_evaluates_each_partition_once(spark, tmp_path, monkeypatch):
+    """A job resumed after half the partitions completed under the same
+    snapshot: ONE battery lowering over the input (each partition evaluated
+    at most once), violations only for the pending partitions, and
+    summaries for EVERY partition equal to a fresh run's."""
+    from okay_spark.fixtures import document_schema, interleaved_documents
+    from okay_spark.state import run_resumable_validation
+
+    docs = interleaved_documents(spark, 400, parts=4).cache()
+    fresh, resumed = tmp_path / "fresh", tmp_path / "resumed"
+    _run_job(spark, docs, str(fresh), "fresh")
+    run_resumable_validation(
+        docs.filter(F.col("part") < 2),
+        document_schema,
+        partition_col="part",
+        violations_target=str(resumed / "violations"),
+        lineage_target=str(resumed / "lineage"),
+        run_id="crashed",
+        snapshot="s1",
+    )
+
+    calls = _spy_battery(monkeypatch)
+    metrics = _run_job(spark, docs, str(resumed), "resume")
+    assert calls == {"validate": [400], "array": 0, "job_counts": 0}
+    assert metrics["battery"]["partitions"] == 2 and metrics["battery"]["skipped"] == 2
+
+    viol = spark.read.parquet(str(resumed / "violations"))
+    resumed_parts = {r["part"] for r in viol.filter(F.col("run_id") == "resume").select("part").distinct().collect()}
+    assert resumed_parts <= {2, 3}
+    fresh_viol = spark.read.parquet(str(fresh / "violations")).drop("run_id")
+    assert sorted(viol.drop("run_id").collect()) == sorted(fresh_viol.collect())
+    for sink in ("summaries", "summaries_by_rule"):
+        got = spark.read.parquet(str(resumed / sink)).drop("run_id").collect()
+        want = spark.read.parquet(str(fresh / sink)).drop("run_id").collect()
+        assert len({r["part"] for r in got}) == 4
+        assert sorted(got) == sorted(want), sink
+
+
 def test_resume_prunes_partitions_at_scan(spark, tmp_path):
     """The skip of already-validated partitions must reach the FileScan as a
     PartitionFilter on a hive-partitioned input — a resumed 10^12-row run

@@ -67,5 +67,18 @@ def test_spark_submit_py_files_runs_full_job(spark):
         v = spark.read.parquet(os.path.join(out_dir, "violations"))
         assert {"doc_id", "path", "rule"} <= set(v.columns)
         assert v.count() == metrics["battery"]["n_violations"]
+        # the sink counts in run_metrics are observed on the writes
+        # (pyspark.sql.Observation, in the submitted job's own JVM)
+        written = json.loads(
+            spark.read.parquet(os.path.join(out_dir, "run_metrics")).first()["metrics"]
+        )
+
+        def rows(sink):
+            return spark.read.parquet(os.path.join(out_dir, sink)).count()
+
+        assert written["duplicate_keys"] == rows("violations_uniqueness")
+        assert written["unknown_media_refs"] == rows("violations_referential")
+        summaries = spark.read.parquet(os.path.join(out_dir, "summaries"))
+        assert summaries.agg({"n_docs": "sum"}).first()[0] == 2000
     finally:
         shutil.rmtree(work, ignore_errors=True)
