@@ -98,7 +98,7 @@ def schema_table_diff(df: DataFrame, schema) -> DataFrame:
     """
     from pyspark.sql.types import ArrayType, MapType, StringType, StructType
 
-    from .engine import _resolves
+    from .plan_exploded import _resolves
     from .paths import parse_path
 
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
@@ -827,11 +827,11 @@ def partition_summary(
     """One row per partition: docs, failed docs, violation count, pass rate.
 
     A scan of its own: it evaluates the battery again in its per-row array
-    form (``violations_array``, a projection; the only shuffle is the final
-    tiny groupBy on the partition key). A caller that also writes the
-    violations should aggregate its battery frame instead, as
-    ``state.run_resumable_validation(summary_targets=...)`` does for the
-    job."""
+    form (``violations_array``, a projection, custom rules included; the
+    only shuffle is the final tiny groupBy on the partition key). A caller
+    that also writes the violations should aggregate its battery frame
+    instead, as ``state.run_resumable_validation(summary_targets=...)`` does
+    for the job."""
     parts = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     n_viol = F.size(violations_array(df.schema, compiled))

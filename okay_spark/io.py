@@ -57,8 +57,9 @@ def read_path(
 
     ``parquet`` and ``orc`` are the columnar formats (both predicate-
     pushdown/column-pruning capable — the plan-shape tests hold for
-    either); ``json``/``csv`` route through the schema-enforcing
-    :func:`read_with_rejects` path when a schema is in play. ``avro``
+    either). ``json`` is read with an inferred schema and ``csv`` with a
+    header and all-string columns; to enforce a schema on either, call
+    :func:`read_with_rejects` instead. ``avro``
     needs the external spark-avro package — absent in this build, so it
     raises with the coordinates to add rather than failing mid-plan."""
     if format == "avro":

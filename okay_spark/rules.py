@@ -569,23 +569,6 @@ def lower_checks(
     return checks
 
 
-def lower_instance(
-    value: Column,
-    dtype: DataType,
-    path: Column,
-    rules: list[tuple[int, Rule]],
-    *,
-    value_never_null: bool = False,
-) -> Column:
-    """All rule checks for one instance -> ``array<violation>`` (possibly
-    empty). The array form feeds the HOF (single-expression) plan used by
-    per-row summaries and streaming."""
-    checks = lower_checks(value, dtype, path, rules, value_never_null=value_never_null)
-    if not checks:
-        return empty_violations()
-    return F.filter(F.array(*checks), lambda v: v.isNotNull())
-
-
 def rule_expected_payload(rule: Rule) -> dict[str, Any] | None:
     """The expected dict a rule reports on failure (for docs/tests)."""
     if rule.type in ("int", "number"):

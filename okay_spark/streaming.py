@@ -3,32 +3,27 @@
 The reference is strictly batch-of-one (its design log explicitly deferred
 parallel/streaming execution, ``/root/reference/docs/development-log.md:410-418``)
 and the north rule is batch-over-Iceberg, so streaming here is an engine
-extension, not a conformance surface: the SAME compiled battery expression
-(:func:`okay_spark.engine.violations_array`) is applied to a streaming
-DataFrame — the battery is a stateless projection, so it is trivially
-streamable with exactly-once file sinks and checkpointing.
+extension, not a conformance surface: the SAME battery lowering is applied
+to a streaming DataFrame — the battery is stateless (projections and
+generates), so it is trivially streamable with exactly-once file sinks and
+checkpointing.
 
-``validate_stream`` wires: readStream (file source) -> battery ->
-violations sink; ``run_incremental`` uses ``Trigger.AvailableNow`` so a cron
-re-run processes only files that arrived since the last checkpoint — the
-streaming analogue of the lineage-based batch resume in
-:mod:`okay_spark.state`. Windowed violation-rate monitoring with a watermark
-covers the late-data case.
+``run_incremental`` wires readStream (file source) -> the batch
+``validate_dataframe`` plan -> violations sink, with ``Trigger.AvailableNow``
+so a cron re-run processes only files that arrived since the last
+checkpoint — the streaming analogue of the lineage-based batch resume in
+:mod:`okay_spark.state`. The monitors count violations per row with the
+per-row ``violations_array`` form: windowed violation-rate monitoring with a
+watermark covers the late-data case (a count over exploded rows would need
+a distinct count, which streaming aggregations do not support).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import validate_dataframe
+from .engine import validate_dataframe, violations_array
 from .schema import CompiledSchema, compile_cached
-
-
-def validate_stream(stream_df: DataFrame, schema, *, id_cols=None) -> DataFrame:
-    """Violations stream from a streaming DataFrame: identical semantics to
-    the batch battery (same expression tree), stateless, no shuffle."""
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
-    return validate_dataframe(stream_df, compiled, id_cols=id_cols)
 
 
 def run_incremental(
@@ -44,7 +39,7 @@ def run_incremental(
     """Process all files not yet seen by the checkpoint, then stop
     (Trigger.AvailableNow): an idempotent, resumable incremental run."""
     stream = spark.readStream.schema(source_ddl).parquet(source_dir)
-    violations = validate_stream(stream, schema, id_cols=id_cols)
+    violations = validate_dataframe(stream, schema, id_cols=id_cols)
     (
         violations.writeStream.format("parquet")
         .option("path", sink_dir)
@@ -65,8 +60,6 @@ def violation_rate_by_window(
 ) -> DataFrame:
     """Windowed violation counts with a watermark for late data — the
     streaming analogue of partition_summary."""
-    from .engine import violations_array
-
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     n_viol = F.size(violations_array(stream_df.schema, compiled))
     return (
@@ -165,8 +158,6 @@ def running_violation_totals(
     """
     import pandas as pd  # noqa: F401 (used in the worker closure)
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .engine import violations_array
 
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     n_viol = F.size(violations_array(stream_df.schema, compiled))

@@ -452,7 +452,7 @@ def _freeze(expected):
     return tuple(sorted((k, tuple(v) if isinstance(v, list) else v) for k, v in expected.items()))
 
 
-def _engine(spark, decls, ddl, rows, strategy="explode"):
+def _engine(spark, decls, ddl, rows):
     from okay_spark import schema as dsl
 
     ddl_with_id = f"{ID} int, {ddl}"
@@ -461,17 +461,16 @@ def _engine(spark, decls, ddl, rows, strategy="explode"):
     compiled = compile_schema(
         _decls_to_fn(decls, dsl.required, dsl.optional, dsl.ignore_extra_fields)
     )
-    out = validate_dataframe(df, compiled, id_cols=[ID], strategy=strategy).collect()
+    out = validate_dataframe(df, compiled, id_cols=[ID]).collect()
     result = {i: set() for i in range(len(rows))}
     for r in out:
         result[r[ID]].add((r["rule"], r["path"], _freeze(parse_expected(r["expected"]))))
     return df, result
 
 
-@pytest.mark.parametrize("strategy", ["explode", "array"])
 @pytest.mark.parametrize("decls,ddl,rows", CASES)
-def test_conformance(spark, okay_reference, decls, ddl, rows, strategy):
-    df, engine_result = _engine(spark, decls, ddl, rows, strategy)
+def test_conformance(spark, okay_reference, decls, ddl, rows):
+    df, engine_result = _engine(spark, decls, ddl, rows)
     docs = [row.asDict(recursive=True) for row in df.collect()]
     oracle_result = _oracle(decls, docs, okay_reference)
     for i in sorted(oracle_result):

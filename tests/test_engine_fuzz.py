@@ -2,8 +2,11 @@
 
 Random typed rows over a nested DDL (scalars, arrays, structs,
 array-of-struct spans, nested arrays) x seeded random schema declarations,
-run through ``validate_dataframe`` under BOTH plan strategies and compared
-per-document against the reference validator on ``Row.asDict(recursive=True)``.
+run through ``validate_dataframe`` and compared per-document against the
+reference validator on ``Row.asDict(recursive=True)``; a reference-free twin
+compares the same documents against :mod:`okay_spark.dynamic` (the engine's
+pure-Python interpreter) and the per-row ``violations_array`` form against
+the exploded pipeline.
 
 Complements ``test_engine_conformance`` (hand-picked goldens) and
 ``test_property_conformance`` (pure-Python dynamic path): this one fuzzes the
@@ -186,9 +189,8 @@ def _freeze(expected):
     )
 
 
-@pytest.mark.parametrize("strategy", ["explode", "array"])
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_engine_fuzz_matches_reference(spark, okay_reference, seed, strategy):
+def test_engine_fuzz_matches_reference(spark, okay_reference, seed):
     from okay import validate  # type: ignore
     from okay.schema import optional as r_optional, required as r_required  # type: ignore
     from okay_spark import schema as dsl
@@ -199,7 +201,7 @@ def test_engine_fuzz_matches_reference(spark, okay_reference, seed, strategy):
 
     df = spark.createDataFrame(rows, schema=f"{ID} int, {DDL}")
     compiled = compile_schema(_schema_fn(decls, dsl.required, dsl.optional))
-    engine_rows = validate_dataframe(df, compiled, id_cols=[ID], strategy=strategy).collect()
+    engine_rows = validate_dataframe(df, compiled, id_cols=[ID]).collect()
     engine = {i: set() for i in range(len(rows))}
     for r in engine_rows:
         engine[r[ID]].add((r["rule"], r["path"], _freeze(parse_expected(r["expected"]))))
@@ -211,6 +213,42 @@ def test_engine_fuzz_matches_reference(spark, okay_reference, seed, strategy):
         want = {(m.type, m.field, _freeze(getattr(m, "expected", None))) for m in msgs}
         got = engine[doc[ID]]
         assert got == want, (
-            f"seed={seed} strategy={strategy} doc={doc!r}\n"
+            f"seed={seed} doc={doc!r}\n"
             f"engine-only={got - want}\noracle-only={want - got}\ndecls={decls}"
         )
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3, 4])
+def test_engine_fuzz_matches_dynamic_interpreter(spark, seed):
+    """Reference-free differential over the fuzz documents: per document,
+    the exploded pipeline's ``(rule, path, expected)`` rows equal
+    ``okay_spark.dynamic.validate_document`` on ``Row.asDict(recursive=True)``
+    (a dict-walking interpreter sharing no lowering code), and the per-row
+    ``violations_array`` form, exploded, equals the pipeline's rows with
+    ``seq``."""
+    from pyspark.sql import functions as F
+
+    from okay_spark import schema as dsl
+    from okay_spark.dynamic import validate_document
+    from okay_spark.engine import violations_array
+
+    rng = random.Random(seed)
+    rows = [(i, *_row(rng)) for i in range(200)]
+    decls = _pick_decls(rng)
+    df = spark.createDataFrame(rows, schema=f"{ID} int, {DDL}")
+    compiled = compile_schema(_schema_fn(decls, dsl.required, dsl.optional))
+
+    exploded = validate_dataframe(df, compiled, id_cols=[ID], include_seq=True).collect()
+    engine = {i: [] for i in range(len(rows))}
+    for r in exploded:
+        engine[r[ID]].append((r["rule"], r["path"], r["expected"]))
+    for doc in (row.asDict(recursive=True) for row in df.collect()):
+        want = sorted(validate_document(compiled, doc), key=repr)
+        got = sorted(engine[doc[ID]], key=repr)
+        assert got == want, f"seed={seed} doc={doc!r}\nengine={got}\ndynamic={want}\ndecls={decls}"
+
+    per_row = df.select(F.col(ID), F.explode(violations_array(df.schema, compiled)).alias("_v"))
+    per_row = per_row.select(ID, "_v.path", "_v.rule", "_v.expected", "_v.seq").collect()
+    assert sorted(map(tuple, per_row), key=repr) == sorted(map(tuple, exploded), key=repr), (
+        f"seed={seed} decls={decls}"
+    )

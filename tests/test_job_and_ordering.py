@@ -74,15 +74,12 @@ def test_message_ordering_matches_okay(spark, okay_reference):
         [(0, 5, "x", [("bad",), ("ok",), ("worse",)], "zz")],
         "_id int, a bigint, b string, xs array<struct<k:string>>, extra_col string",
     )
-    for strategy in ("array", "explode"):
-        got = [
-            (r["rule"], r["path"])
-            for r in validate_dataframe(
-                df, compile_schema(ours), id_cols=["_id"], include_seq=True, strategy=strategy
-            )
-            .orderBy("seq", "path")
-            .collect()
-        ]
-        doc = df.first().asDict(recursive=True)
-        expect = [(m.type, m.field) for m in validate(ref, doc)]
-        assert got == expect, f"{strategy}: {got} != {expect}"
+    got = [
+        (r["rule"], r["path"])
+        for r in validate_dataframe(df, compile_schema(ours), id_cols=["_id"], include_seq=True)
+        .orderBy("seq", "path")
+        .collect()
+    ]
+    doc = df.first().asDict(recursive=True)
+    expect = [(m.type, m.field) for m in validate(ref, doc)]
+    assert got == expect, f"{got} != {expect}"

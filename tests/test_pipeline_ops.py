@@ -340,14 +340,32 @@ def test_resumable_run_scans_source_once(spark, tmp_path, monkeypatch):
     assert "part" in written.columns  # per-partition violation rows
 
 
-def _run_job(spark, docs, out, run_id, **kwargs):
+def _run_job(spark, docs, out, run_id, schema=None, **kwargs):
     from okay_spark.fixtures import document_schema, media_catalog
     from okay_spark.job import run_full_validation
 
     return run_full_validation(
-        spark, docs, media_catalog(spark, 1_000), document_schema,
+        spark, docs, media_catalog(spark, 1_000), schema or document_schema,
         output=out, run_id=run_id, input_snapshot="s1", **kwargs,
     )
+
+
+def _custom_document_schema():
+    """``document_schema`` plus one Python custom rule (an Arrow pass)."""
+    from okay_spark import required
+    from okay_spark.fixtures import document_schema
+
+    # nested, so the worker unpickles it by value, not from this module
+    def offsets_monotonic(field, value, **kw):
+        from okay_spark.messages import Message
+
+        offs = [s["offset"] for s in value or [] if s is not None and s["offset"] is not None]
+        if any(b < a for a, b in zip(offs, offs[1:])):
+            return Message(type="out_of_order_spans", field=field)
+        return None
+
+    document_schema()
+    required("spans", type="custom", validator=offsets_monotonic)
 
 
 def _spy_battery(monkeypatch):
@@ -403,25 +421,32 @@ def test_job_lowers_battery_once(spark, tmp_path, monkeypatch):
 def test_job_summaries_match_operators(spark, tmp_path):
     """The job's summaries come from its battery frame, not from the
     ``partition_summary`` / ``rule_summary`` operators — yet equal them value
-    for value, with the same parquet schema (types, nullability, order)."""
+    for value, with the same parquet schema (types, nullability, order).
+    With a custom rule in the schema, both sides count its violations."""
     import pyarrow.parquet as pq
 
     from okay_spark.checks import partition_summary, rule_summary
     from okay_spark.fixtures import document_schema, interleaved_documents
 
+    def parquet_schema(path):
+        return pq.read_schema(next(path.glob("*.parquet"))).remove_metadata()
+
     docs = interleaved_documents(spark, 400, parts=4).cache()
-    out = tmp_path / "run"
-    _run_job(spark, docs, str(out), "t1")
-    for sink, op in (("summaries", partition_summary), ("summaries_by_rule", rule_summary)):
-        want = op(docs, document_schema, "part").withColumn("run_id", F.lit("t1"))
-        want.write.parquet(str(tmp_path / f"want_{sink}"))
-        got = spark.read.parquet(str(out / sink))
-        assert sorted(got.collect()) == sorted(want.collect()), sink
-
-        def schema(path):
-            return pq.read_schema(next(path.glob("*.parquet"))).remove_metadata()
-
-        assert schema(out / sink) == schema(tmp_path / f"want_{sink}"), sink
+    for name, schema in (("native", document_schema), ("custom", _custom_document_schema)):
+        out = tmp_path / name / "run"
+        _run_job(spark, docs, str(out), "t1", schema=schema)
+        by_rule = spark.read.parquet(str(out / "summaries_by_rule"))
+        if name == "custom":
+            assert by_rule.filter(F.col("rule") == "out_of_order_spans").count() > 0
+        for sink, op in (("summaries", partition_summary), ("summaries_by_rule", rule_summary)):
+            want = op(docs, schema, "part").withColumn("run_id", F.lit("t1"))
+            want.write.parquet(str(tmp_path / name / f"want_{sink}"))
+            got = spark.read.parquet(str(out / sink))
+            assert sorted(got.collect()) == sorted(want.collect()), (name, sink)
+            assert parquet_schema(out / sink) == parquet_schema(tmp_path / name / f"want_{sink}"), (
+                name,
+                sink,
+            )
 
 
 def test_job_summaries_count_failing_rows(spark, tmp_path):

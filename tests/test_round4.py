@@ -757,7 +757,7 @@ def test_adjacent_pair_violations_all_pairs_and_nulls(spark):
 
 
 def test_quarantine_partitions_input_and_digests_reasons(spark):
-    from okay_spark import required
+    from okay_spark import ignore_extra_fields, required
     from okay_spark.engine import quarantine
 
     def schema():
@@ -776,6 +776,24 @@ def test_quarantine_partitions_input_and_digests_reasons(spark):
     assert got[None]["reasons"] == "doc_id:null_value;text:null_value"
     # the split is a partition of the input
     assert clean.count() + quar.count() == df.count()
+
+    # custom rules route rows too (their Arrow pass joins the per-row array)
+    def not_negative(field, value, **kw):
+        from okay_spark.messages import Message
+
+        return Message(type="negative", field=field) if value < 0 else None
+
+    def custom_schema():
+        required("n", type="custom", validator=not_negative)
+        ignore_extra_fields()
+
+    df = spark.createDataFrame([(1, 5), (2, -1), (3, -7)], "doc_id int, n int")
+    clean, quar = quarantine(df, custom_schema, id_cols=["doc_id"])
+    assert [r["doc_id"] for r in clean.collect()] == [1]
+    assert sorted((r["doc_id"], r["n_violations"], r["reasons"]) for r in quar.collect()) == [
+        (2, 1, "n:negative"),
+        (3, 1, "n:negative"),
+    ]
 
 
 def test_quarantine_is_shuffle_free(spark):
